@@ -69,21 +69,6 @@ def entry(spark: SparkSession) -> DataFrame:
 # CDC operator queries (events table; DuckDB-oracled)
 # ---------------------------------------------------------------------------
 
-def _q_lww_window(spark, sf):
-    ev = _load(spark, sf, "events")
-    w = Window.partitionBy("user_id").orderBy(F.col("event_id").desc())
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            F.col("event_id").alias("last_event_id"),
-            F.col("event_type").alias("last_event_type"),
-            F.col("value").alias("last_value"),
-        )
-    )
-
-
 _SQL_LWW = """
 SELECT user_id, event_id AS last_event_id, event_type AS last_event_type,
        value AS last_value
@@ -735,45 +720,61 @@ _MT_SCHEDULE = (
 
 
 def _q_multi_table_replay(spark, sf):
-    """Engine drive: a 2-table binlog (with a drop+re-add on one table)
-    replayed through apply_batch_multi; returns per-table final summary."""
-    from cdc_spark.genlog import GenConfig, write_binlog
+    """Engine drive of the table router in both image shapes: a 2-table
+    binlog (with a drop+re-add on one table) replayed through
+    apply_batch_multi, and its key-only twin (reference CT shape, routed
+    per table — CTInputDStream.java:65-99 × 112-131) replayed with
+    images="fetch". One summary row per (images, table) carries
+    `matches_oracle` against the matching multi-table oracle."""
+    from cdc_spark import oracle as _oracle
+    from cdc_spark.genlog import GenConfig, write_binlog, write_binlog_keys
     from cdc_spark.streaming.pipeline import replay_multi
 
     tables = ("corpus.tokens", "corpus.aux")
+    drives = (
+        ("carry", write_binlog, {}),
+        ("fetch", write_binlog_keys,
+         {"p_pk_change": 0.10, "p_missing_tokens": 0.4, "p_missing_source": 0.4}),
+    )
     work = tempfile.mkdtemp(prefix="cdc_mt_")
     try:
-        cfg = GenConfig(
-            n_events=6_000, n_docs=400, events_per_epoch=1_500, seed=42,
-            tables=tables, ddl_schedule=_MT_SCHEDULE,
-        )
-        write_binlog(cfg, f"{work}/binlog")
-        router = replay_multi(spark, f"{work}/binlog", f"{work}/root", lineage=False)
-        # per-table oracle digest literals: the row itself carries the
-        # comparison, so a drifted engine mismatches visibly even under
-        # the driver's rows-only check
-        from cdc_spark import oracle as _oracle
-
-        by_table = _oracle.replay_tables(f"{work}/binlog/segment-*.parquet")
         per = []
-        for name in tables:
-            state, _reg = by_table.get(name, ({}, None))
-            o_n = len(state)
-            o_max = max((r["last_lsn"] for r in state.values()), default=None)
-            o_sum = sum(r["n_tok"] for r in state.values() if r["n_tok"] is not None)
-            per.append(
-                router.get(name).read_resolved(spark).agg(
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.max("last_lsn").alias("max_lsn"),
-                    F.sum("n_tok").alias("sum_n_tok"),
-                ).withColumn("table", F.lit(name)).withColumn(
-                    "matches_oracle",
-                    (F.col("n_rows") == F.lit(o_n))
-                    & (F.col("max_lsn") == F.lit(o_max))
-                    & (F.col("sum_n_tok") == F.lit(o_sum)),
-                )
+        for images, write, mix in drives:
+            cfg = GenConfig(
+                n_events=6_000, n_docs=400, events_per_epoch=1_500, seed=42,
+                tables=tables, ddl_schedule=_MT_SCHEDULE, **mix,
             )
-        out = per[0].unionByName(per[1])
+            binlog = f"{work}/{images}/binlog"
+            write(cfg, binlog)
+            router = replay_multi(spark, binlog, f"{work}/{images}/root",
+                                  lineage=False, images=images)
+            # per-table oracle digest literals: the row itself carries the
+            # comparison, so a drifted engine mismatches visibly even under
+            # the driver's rows-only check
+            by_table = _oracle.replay_tables(f"{binlog}/segment-*.parquet",
+                                             images=images)
+            for name in tables:
+                state, _reg = by_table.get(name, ({}, None))
+                o_n = len(state)
+                o_max = max((r["last_lsn"] for r in state.values()), default=None)
+                o_sum = sum(r["n_tok"] for r in state.values() if r["n_tok"] is not None)
+                per.append(
+                    router.get(name).read_resolved(spark).agg(
+                        F.count(F.lit(1)).alias("n_rows"),
+                        F.max("last_lsn").alias("max_lsn"),
+                        F.sum("n_tok").alias("sum_n_tok"),
+                    ).withColumn("table", F.lit(name))
+                    .withColumn("images", F.lit(images))
+                    .withColumn(
+                        "matches_oracle",
+                        (F.col("n_rows") == F.lit(o_n))
+                        & (F.col("max_lsn") == F.lit(o_max))
+                        & (F.col("sum_n_tok") == F.lit(o_sum)),
+                    )
+                )
+        out = per[0]
+        for df in per[1:]:
+            out = out.unionByName(df)
         return out.localCheckpoint(eager=True)
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -786,6 +787,14 @@ def _digest_columns(out: DataFrame, oracle_rows: list[dict]) -> DataFrame:
     SAME digest computed by Spark over the result — a drifted engine
     mismatches visibly in the returned rows (`matches_oracle=false`),
     upgrading the driver's rows-only check to a real equivalence pin."""
+    return out.withColumn("oracle_rows", F.lit(len(oracle_rows))).withColumn(
+        "matches_oracle", F.lit(_digest_matches(out, oracle_rows))
+    )
+
+
+def _digest_matches(out: DataFrame, oracle_rows: list[dict]) -> bool:
+    """`out`'s (row count, summed per-row md5 prefix) digest equals the
+    same digest over the oracle's rows."""
     import hashlib
 
     # per-row hash reduced mod 10^12 so the int64 sum cannot overflow
@@ -808,10 +817,7 @@ def _digest_columns(out: DataFrame, oracle_rows: list[dict]) -> DataFrame:
         F.lit(10**12),
     )
     got = out.agg(F.count(F.lit(1)).alias("n"), F.sum(h).alias("s")).first()
-    matches = bool(got["n"] == o_n and got["s"] == o_sum)
-    return out.withColumn("oracle_rows", F.lit(o_n)).withColumn(
-        "matches_oracle", F.lit(matches)
-    )
+    return bool(got["n"] == o_n and got["s"] == o_sum)
 
 
 def _summary_cols(df: DataFrame) -> DataFrame:
@@ -888,14 +894,35 @@ def _q_replay_final_honest(spark, sf):
         shutil.rmtree(work, ignore_errors=True)
 
 
+def _fetch_drive(spark, work: str, cfg, parts: int = 1) -> tuple[DataFrame, list[dict]]:
+    """Generate the keys twin of `cfg`, fetch-replay it (images come
+    from earlier events + the engine's own state), and return the
+    resolved summary rows with the fetch-mode oracle's rows."""
+    from cdc_spark import oracle as _oracle
+    from cdc_spark.genlog import write_binlog_keys
+    from cdc_spark.streaming.pipeline import replay
+
+    write_binlog_keys(cfg, f"{work}/binlog", parts=parts)
+    table = replay(spark, f"{work}/binlog", f"{work}/table", images="fetch",
+                   lineage=False)
+    state, reg = _oracle.replay(f"{work}/binlog/segment-*.parquet", images="fetch")
+    return _summary_cols(table.read_resolved(spark)), _oracle_summary_rows(state, reg)
+
+
 def _q_fetch_replay_final(spark, sf):
     """Engine drive of the KEY-ONLY feed path (reference CT shape,
-    CTInputDStream.java:112-131): generate the keys twin, fetch-replay
-    it (images come from earlier events + the engine's own state), and
-    digest-pin against the fetch-mode oracle."""
-    from cdc_spark import oracle as _oracle
-    from cdc_spark.genlog import GenConfig, write_binlog_keys
-    from cdc_spark.streaming.pipeline import replay
+    CTInputDStream.java:112-131), digest-pinned against the fetch-mode
+    oracle.
+
+    `hot_key_matches_oracle` pins the DOMINANT-TIMELINE regime on a
+    second drive: a zipf-2.2 key-only epoch whose top key holds ~2/3 of
+    the events trips `fetch_winners_auto`'s sampled dispatch (top-share
+    ≥0.30 at ≥250k DML events) into the parallel-prefix tree fold, so
+    the tree path, through the unmodified production replay, is checked
+    against the oracle too (the main drive stays under the dispatch
+    gates and pins the sequential kernel). A mass re-key/rewrite feed is
+    the 100-TB case where one entity dominates an epoch."""
+    from cdc_spark.genlog import GenConfig
 
     n_docs = _load(spark, sf, "documents").count()
     work = tempfile.mkdtemp(prefix="cdc_fetch_")
@@ -904,93 +931,13 @@ def _q_fetch_replay_final(spark, sf):
             n_events=10_000, n_docs=max(int(n_docs), 50),
             events_per_epoch=1_000, seed=42,
         )
-        write_binlog_keys(cfg, f"{work}/binlog")
-        table = replay(spark, f"{work}/binlog", f"{work}/table", images="fetch",
-                       lineage=False)
-        out = _summary_cols(table.read_resolved(spark))
-        state, reg = _oracle.replay(f"{work}/binlog/segment-*.parquet", images="fetch")
-        out = _digest_columns(out, _oracle_summary_rows(state, reg))
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-def _q_hot_key_fetch_final(spark, sf):
-    """Engine drive of the DOMINANT-TIMELINE regime (round 5): a
-    zipf-2.2 key-only feed whose top key holds ~2/3 of the epoch trips
-    `fetch_winners_auto`'s sampled dispatch (top-share ≥0.30 at ≥250k
-    DML events) into the parallel-prefix tree fold — the driver-visible
-    pin that the TREE path, through the unmodified production replay,
-    reproduces the fetch-mode oracle (the other fetch entries stay
-    under the dispatch gates and pin the sequential kernel). Reference
-    shape: CTInputDStream.java:112-131; a mass re-key/rewrite feed is
-    the 100-TB case where one entity dominates an epoch."""
-    from cdc_spark import oracle as _oracle
-    from cdc_spark.genlog import GenConfig, write_binlog_keys
-    from cdc_spark.streaming.pipeline import replay
-
-    work = tempfile.mkdtemp(prefix="cdc_hotfetch_")
-    try:
-        cfg = GenConfig(
+        out = _digest_columns(*_fetch_drive(spark, f"{work}/main", cfg))
+        hot_cfg = GenConfig(
             n_events=260_000, n_docs=20_000, events_per_epoch=260_000,
             seed=42, zipf_s=2.2,
         )
-        write_binlog_keys(cfg, f"{work}/binlog", parts=8)
-        table = replay(spark, f"{work}/binlog", f"{work}/table",
-                       images="fetch", lineage=False)
-        out = _summary_cols(table.read_resolved(spark))
-        state, reg = _oracle.replay(f"{work}/binlog/segment-*.parquet",
-                                    images="fetch")
-        out = _digest_columns(out, _oracle_summary_rows(state, reg))
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-def _q_multi_table_fetch_replay(spark, sf):
-    """Engine drive: a 2-table KEY-ONLY binlog (reference CT shape,
-    routed per table — CTInputDStream.java:65-99 × 112-131) replayed
-    with --multi-table --images fetch; per-table summary rows carry
-    `matches_oracle` digests from the fetch-mode multi-table oracle."""
-    from cdc_spark import oracle as _oracle
-    from cdc_spark.genlog import GenConfig, write_binlog_keys
-    from cdc_spark.streaming.pipeline import replay_multi
-
-    tables = ("corpus.tokens", "corpus.aux")
-    work = tempfile.mkdtemp(prefix="cdc_mtf_")
-    try:
-        cfg = GenConfig(
-            n_events=6_000, n_docs=400, events_per_epoch=1_500, seed=42,
-            tables=tables, ddl_schedule=_MT_SCHEDULE,
-            p_pk_change=0.10, p_missing_tokens=0.4, p_missing_source=0.4,
-        )
-        write_binlog_keys(cfg, f"{work}/binlog")
-        router = replay_multi(
-            spark, f"{work}/binlog", f"{work}/root", lineage=False,
-            images="fetch",
-        )
-        by_table = _oracle.replay_tables(
-            f"{work}/binlog/segment-*.parquet", images="fetch"
-        )
-        per = []
-        for name in tables:
-            state, _reg = by_table.get(name, ({}, None))
-            o_n = len(state)
-            o_max = max((r["last_lsn"] for r in state.values()), default=None)
-            o_sum = sum(r["n_tok"] for r in state.values() if r["n_tok"] is not None)
-            per.append(
-                router.get(name).read_resolved(spark).agg(
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.max("last_lsn").alias("max_lsn"),
-                    F.sum("n_tok").alias("sum_n_tok"),
-                ).withColumn("table", F.lit(name)).withColumn(
-                    "matches_oracle",
-                    (F.col("n_rows") == F.lit(o_n))
-                    & (F.col("max_lsn") == F.lit(o_max))
-                    & (F.col("sum_n_tok") == F.lit(o_sum)),
-                )
-            )
-        out = per[0].unionByName(per[1])
+        hot_ok = _digest_matches(*_fetch_drive(spark, f"{work}/hot", hot_cfg, parts=8))
+        out = out.withColumn("hot_key_matches_oracle", F.lit(hot_ok))
         return out.localCheckpoint(eager=True)
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -1034,7 +981,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     training-data ops the 100-TB pipeline needs)."""
     return {
         # CDC operators (§2) over the events table
-        "cdc_lww_dedupe_window": _q_lww_window,      # O3 (window form)
         "cdc_lww_dedupe_agg": _q_lww_agg,            # O3 (max_by partial-agg form)
         "cdc_merge_apply": _q_merge_apply,           # K4/K5 final-state semantics
         "cdc_missing_mask_merge": _q_mask_merge,     # T7 before-image fill analogue
@@ -1086,9 +1032,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cdc_replay_final_state": _q_replay_final,
         "cdc_replay_final_state_honest": _q_replay_final_honest,
         "cdc_fetch_replay_final_state": _q_fetch_replay_final,
-        "cdc_hot_key_fetch_final_state": _q_hot_key_fetch_final,
         "cdc_multi_table_replay": _q_multi_table_replay,
-        "cdc_multi_table_fetch_replay": _q_multi_table_fetch_replay,
     }
 
 
@@ -1113,7 +1057,6 @@ def oracle_sql() -> dict[str, str]:
         for l, cond in langs.items()
     )
     return {
-        "cdc_lww_dedupe_window": _SQL_LWW,
         "cdc_lww_dedupe_agg": _SQL_LWW,
         "cdc_merge_apply": """
             SELECT user_id, event_id AS last_event_id, value AS last_value

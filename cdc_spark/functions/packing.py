@@ -16,7 +16,7 @@ corpus through ONE partition (Spark plans an un-partitioned window as
 Exchange SinglePartition) — the classic scale cliff. Instead the
 offsets are computed as a textbook two-phase distributed prefix sum:
 
-  1. range-bucket each row by id (`floor((id - min_id)/width)` — order-
+  1. range-bucket each row by id (`(id - min_id) div width` — order-
      aligned, so bucket b's rows all precede bucket b+1's);
   2. ONE map-side-combinable `groupBy(_bkt).sum(n_tok)` → collect the
      O(n_buckets) per-bucket totals to the driver and exclusive-scan
@@ -37,9 +37,15 @@ is a P-series training-data operator per SURVEY.md §2.6.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+
+def _range_bucket(id_col: str, lo: int, width: int) -> Column:
+    """`(id - lo) div width` in integer arithmetic: a double quotient
+    rounds ids beyond 2^53 up across a bucket boundary."""
+    return F.expr(f"(CAST(`{id_col}` AS BIGINT) - ({lo})) div {width}")
 
 
 def pack_manifest(
@@ -78,7 +84,7 @@ def pack_manifest(
     src = df.select(
         F.col(id_col).cast("long").alias(id_col),
         F.col(n_tok_col).cast("long").alias(n_tok_col),
-        F.floor((F.col(id_col) - F.lit(lo)) / F.lit(width)).alias("_bkt"),
+        _range_bucket(id_col, lo, width).alias("_bkt"),
     )
 
     # phase 1+2: per-bucket totals (map-side combinable) -> driver
@@ -142,8 +148,8 @@ def emit_sequences(
     (explode fan-out is O(total_tokens/L) rows), and a sequence
     receives ≤ L contributor chunks of ≤ L tokens each — groups are
     PERFECTLY balanced at exactly seq_len tokens, so the assembling
-    aggregation has zero skew by design (the rare property the LWW
-    dedupe needs salting to approximate). No sequence ever concentrates
+    aggregation has zero skew by design (the LWW dedupe only gets
+    there through map-side partial aggregation). No sequence ever concentrates
     load the way a hot doc_id does. Wide-data exchanges: exactly two
     (hashpartitioning(_bkt) into the window, hashpartitioning(seq_id)
     into the assembly) — plan-pinned.
@@ -171,7 +177,7 @@ def emit_sequences(
         F.col(id_col).cast("long").alias(id_col),
         F.col(tokens_col),
         F.size(tokens_col).cast("long").alias("_nt"),
-        F.floor((F.col(id_col) - F.lit(lo)) / F.lit(width)).alias("_bkt"),
+        _range_bucket(id_col, lo, width).alias("_bkt"),
     )
 
     # phase 1+2: per-bucket token totals (column-pruned to _bkt/_nt) ->

@@ -115,8 +115,6 @@ def apply_batch(
     table: TargetTable,
     batch: DataFrame,
     epoch: int,
-    dedupe_mode: str = "agg",
-    normalize_impl: str = "expr",
     lineage_dir: str | None = None,
     verify_redelivery: bool = False,
     images: str = "carry",
@@ -185,10 +183,7 @@ def apply_batch(
         # micro-batches (BENCH.md epoch-size sensitivity table). Fetch
         # mode always takes the full pre-pass (it needs the stats and
         # the drop-DDL list before touching state anyway).
-        return _apply_batch_observed(
-            spark, table, batch, epoch, t0,
-            dedupe_mode=dedupe_mode, normalize_impl=normalize_impl,
-        )
+        return _apply_batch_observed(spark, table, batch, epoch, t0)
 
     # -- phase 1: one pruned pass → per-partition lineage + DDL barrier
     # (the prefetch thread already paid this scan when `prepared`) -------
@@ -256,8 +251,8 @@ def apply_batch(
             delta = build_fetch_delta(spark, table, batch, drops,
                                       n_pk_change=n_pkc, n_events=n_dml)
     else:
-        events = normalize(batch, impl=normalize_impl)
-        deduped = lww_dedupe(events, key="doc_id", order="lsn", mode=dedupe_mode)
+        events = normalize(batch)
+        deduped = lww_dedupe(events, key="doc_id", order="lsn")
         delta = project_to_table(deduped, registry)
     n_events = int(sum(r["n_insert"] + r["n_update"] + r["n_delete"] + r["n_ddl"] for r in lineage))
     stats = {
@@ -265,10 +260,9 @@ def apply_batch(
         "min_lsn": min((r["min_lsn"] for r in lineage), default=None),
         "max_lsn": max((r["max_lsn"] for r in lineage), default=None),
     }
-    # the LWW dedupe aggregate already hash-partitions by doc_id ('agg'
-    # and 'salted' modes; 'window' too — Window.partitionBy shuffles by
-    # key; fetch mode's per-key replay groupBy likewise), so the
-    # bucketed delta write needs no second exchange
+    # the LWW dedupe aggregate already hash-partitions by doc_id (fetch
+    # mode's per-key replay groupBy likewise), so the bucketed delta
+    # write needs no second exchange
     entry = table.commit_delta(delta, epoch, stats=stats, pre_partitioned=True)
     if images == "fetch":
         from cdc_spark.caching import release_persisted
@@ -312,8 +306,6 @@ def _apply_batch_observed(
     batch: DataFrame,
     epoch: int,
     t0: float,
-    dedupe_mode: str = "agg",
-    normalize_impl: str = "expr",
 ) -> dict:
     """apply_batch's single-job fast path: DDL via pruned probe, guard +
     stats via Observation on the delta-write job (see apply_batch)."""
@@ -373,8 +365,8 @@ def _apply_batch_observed(
             F.lit(0).cast("long"),
         ).alias("n_heartbeat"),
     )
-    events = normalize(observed, impl=normalize_impl)
-    deduped = lww_dedupe(events, key="doc_id", order="lsn", mode=dedupe_mode)
+    events = normalize(observed)
+    deduped = lww_dedupe(events, key="doc_id", order="lsn")
     delta = project_to_table(deduped, registry)
 
     metrics: dict = {}
@@ -415,8 +407,6 @@ def apply_batch_multi(
     router: TableRouter,
     batch: DataFrame,
     epoch: int,
-    dedupe_mode: str = "agg",
-    normalize_impl: str = "expr",
     lineage: bool = True,
     images: str = "carry",
 ) -> dict:
@@ -555,10 +545,7 @@ def apply_batch_multi(
         if images == "fetch":
             _stage_epoch_fetch_events(spark, batch, stage_dir)
         else:
-            _stage_epoch_winners(
-                spark, batch, stage_dir,
-                dedupe_mode=dedupe_mode, normalize_impl=normalize_impl,
-            )
+            _stage_epoch_winners(spark, batch, stage_dir)
         slices = _stage_slices(stage_dir)
     fetch_tails: list[str] = []
     for name in names:
@@ -656,8 +643,6 @@ def _stage_epoch_winners(
     spark: SparkSession,
     batch: DataFrame,
     stage_dir: str,
-    dedupe_mode: str = "agg",
-    normalize_impl: str = "expr",
 ) -> None:
     """ONE job: normalize the whole epoch, LWW-dedupe keyed by
     (table, doc_id), write the winners partitioned by table.
@@ -673,12 +658,8 @@ def _stage_epoch_winners(
 
     tmp = stage_dir + ".inprogress"
     _shutil.rmtree(tmp, ignore_errors=True)
-    events = normalize(batch, impl=normalize_impl, keep=("table",))
-    # auto (hot-key salting) is single-key; the composite (table, doc_id)
-    # key takes the agg formulation, which is already skew-proof via
-    # map-side partial aggregation — all modes are result-identical
-    mode = "agg" if dedupe_mode == "auto" else dedupe_mode
-    winners = lww_dedupe(events, key=["table", "doc_id"], order="lsn", mode=mode)
+    events = normalize(batch, keep=("table",))
+    winners = lww_dedupe(events, key=["table", "doc_id"], order="lsn")
     winners.write.mode("overwrite").partitionBy("table").parquet(tmp)
     os.makedirs(os.path.dirname(stage_dir), exist_ok=True)
     os.rename(tmp, stage_dir)
@@ -754,8 +735,6 @@ def replay_multi(
     spark: SparkSession,
     binlog_dir: str,
     root_path: str,
-    dedupe_mode: str = "agg",
-    normalize_impl: str = "expr",
     lineage: bool = True,
     stop_after: int | None = None,
     compact_every: int = 16,
@@ -797,10 +776,7 @@ def replay_multi(
             if images == "fetch":
                 _stage_epoch_fetch_events(spark, b, stage_dir)
             else:
-                _stage_epoch_winners(
-                    spark, b, stage_dir,
-                    dedupe_mode=dedupe_mode, normalize_impl=normalize_impl,
-                )
+                _stage_epoch_winners(spark, b, stage_dir)
         except Exception:
             pass
 
@@ -819,9 +795,7 @@ def replay_multi(
             ):
                 fut = pool.submit(_prestage, eps[i + 1])
             apply_batch_multi(
-                spark, router, batch, epoch,
-                dedupe_mode=dedupe_mode, normalize_impl=normalize_impl,
-                lineage=lineage, images=images,
+                spark, router, batch, epoch, lineage=lineage, images=images,
             )
             done += 1
             if stop_after is not None and done >= stop_after:
@@ -841,8 +815,6 @@ def replay(
     spark: SparkSession,
     binlog_dir: str,
     table_path: str,
-    dedupe_mode: str = "agg",
-    normalize_impl: str = "expr",
     lineage: bool = True,
     stop_after: int | None = None,
     compact_every: int = 16,
@@ -926,7 +898,6 @@ def replay(
             try:
                 res = apply_batch(
                     spark, table, batch, epoch,
-                    dedupe_mode=dedupe_mode, normalize_impl=normalize_impl,
                     lineage_dir=lineage_dir, images=images, prepared=prepared,
                 )
             finally:
@@ -1062,7 +1033,6 @@ def stream(
     binlog_dir: str,
     table_path: str,
     checkpoint_dir: str,
-    dedupe_mode: str = "agg",
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
     wire: str = "parquet",
@@ -1096,9 +1066,7 @@ def stream(
             for e, cur, _ in _epoch_gate(
                 spark, bdf, binlog_dir, staging_root_m, lambda _e: False
             ):
-                apply_batch_multi(
-                    spark, router, cur, e, dedupe_mode=dedupe_mode, images=images
-                )
+                apply_batch_multi(spark, router, cur, e, images=images)
 
         writer = (
             stream_reader(spark, binlog_dir, max_files_per_trigger, wire=wire)
@@ -1135,8 +1103,7 @@ def stream(
             # differ from what committed
             apply_batch(
                 spark, table, cur, e,
-                dedupe_mode=dedupe_mode, lineage_dir=lineage_dir,
-                verify_redelivery=True, images=images,
+                lineage_dir=lineage_dir, verify_redelivery=True, images=images,
             )
             sparse.add(e)
             latest = e if latest is None else max(latest, e)

@@ -50,6 +50,19 @@ def test_pack_invariant_to_bucket_count(spark):
         assert cur == ref
 
 
+def test_range_bucket_exact_near_2_60(spark):
+    """Ids near 2^60 must land in their integer bucket: a double
+    quotient rounds 2^59 - 1 up to 2^59 and moves it across the
+    boundary (and 2^60 - 1 into a bucket past the last)."""
+    from cdc_spark.functions.packing import _range_bucket
+
+    hi = 2**60 - 1
+    width = hi // 2 + 1  # the width pack_manifest sizes for 2 buckets on [0, hi]
+    df = spark.createDataFrame([(0,), (2**59 - 1,), (2**59,), (hi,)], "doc_id long")
+    got = [r[0] for r in df.select(_range_bucket("doc_id", 0, width)).collect()]
+    assert got == [0, 0, 1, 1]
+
+
 def test_pack_zero_token_doc_occupies_its_sequence(spark):
     rows = [(1, 10), (2, 0), (3, 5)]
     got = {r["doc_id"]: r for r in pack_manifest(_docs(spark, rows), 8).collect()}

@@ -171,3 +171,25 @@ def test_changelog_chains_to_downstream_replica(spark, workdir):
     primary = TargetTable(primary_dir)
     assert _rows2(replica) == _rows2(primary)
     assert len(_rows2(replica)) > 0
+
+
+def test_changes_cli_reports_to_version_zero(spark, workdir, small_binlog):
+    """`changes --to-version 0` must report the window it scanned
+    (version 0), not the table's latest version."""
+    import json
+    import subprocess
+    import sys
+
+    table_dir = f"{workdir}/tt_changes_cli"
+    replay(spark, small_binlog, table_dir, lineage=False, stop_after=1)
+    assert TargetTable(table_dir).state()["version"] > 0
+    # subprocess: job.main stops its session on exit, which must not
+    # kill this test session's shared SparkSession
+    proc = subprocess.run(
+        [sys.executable, "-m", "cdc_spark.job", "changes", "--table", table_dir,
+         "--from-version", "0", "--to-version", "0", "--master", "local[2]"],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["to_version"] == 0 and out["rows"] == 0
